@@ -59,6 +59,23 @@ object GraftSession {
     spark
   }
 
+  /** A numeric graft conf: `default` when unset; a value that does not
+    * parse, or that `valid` rejects, throws IllegalArgumentException
+    * naming the key and the bad value — a typo must never silently fall
+    * back to the default.
+    */
+  def numConf[T](spark: SparkSession, key: String, default: T, expected: String)(
+      parse: String => T,
+      valid: T => Boolean = (_: T) => true): T =
+    spark.conf.getOption(key) match {
+      case None => default
+      case Some(v) =>
+        val t =
+          try Some(parse(v.trim))
+          catch { case _: NumberFormatException => None }
+        t.filter(valid).getOrElse(throw new IllegalArgumentException(s"$key must be $expected, got '$v'"))
+    }
+
   /** Standalone builder for tests / tools. `local[n]` with shuffle
     * partitions matched to cores (200 default is wrong single-node; on a
     * real cluster this would be sized to 2-3x total executor cores, or left

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
+
 /** Registry of per-run scratch directories (q177's MERGE table, q180's ORC
   * round-trip dir) with one JVM shutdown hook that removes them all.
   *
@@ -31,6 +33,21 @@ object Scratch {
   def register(dir: String): Unit = {
     hookInstalled
     registered.add(dir)
+  }
+
+  /** The scratch root of query fixture `tag` over data dir `d`:
+    * `<java.io.tmpdir>/graft_<tag>_<hex(d.hashCode)>_<appId>`, registered
+    * for removal at JVM exit and emptied if an earlier call in this run
+    * left it behind, so every caller starts from an absent root.
+    */
+  def root(s: SparkSession, d: String, tag: String): org.apache.hadoop.fs.Path = {
+    val p = new org.apache.hadoop.fs.Path(
+      System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
+    register(p.toString)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+    p
   }
 
   private def deleteRec(p: Path): Unit =

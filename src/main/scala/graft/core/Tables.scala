@@ -20,8 +20,6 @@ case class Event(
     value: Double,
     props: String)
 
-case class Doc(doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
-
 /** Fixture loaders. All loads are lazy parquet scans — predicate pushdown
   * and column pruning reach the scan because nothing here forces
   * materialization.

@@ -108,17 +108,6 @@ object Layout {
       .cast("long")
   }
 
-  /** DuckDB twin of [[zorderN]] (same parenthesization discipline as
-    * [[sqlZorder2]]).
-    */
-  def sqlZorderN(cols: Seq[String], bits: Int = 16): String = {
-    val k = cols.length
-    val terms = cols.zipWithIndex
-      .map { case (c, j) => s"(((($c) >> i) & 1) << (${k}*i + $j))" }
-      .mkString(" + ")
-    s"CAST(list_sum(list_transform(range(0, $bits), i -> $terms)) AS BIGINT)"
-  }
-
   /** k-dimensional Hilbert index via Skilling's transpose construction
     * (J. Skilling, "Programming the Hilbert Curve", AIP Conf. Proc. 707,
     * 2004): axes → transpose (inverse-undo + Gray decode), then

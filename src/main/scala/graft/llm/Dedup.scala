@@ -25,27 +25,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
 
-  /** Word-`n`-gram shingles per doc, exploded (with duplicates):
-    * (id, shingle). No shuffle — pure per-row expansion.
-    *
-    * Staged through two projections on purpose: inlining
-    * `shingles(tokens(text))` into the explode makes Catalyst re-evaluate
-    * the tokenization once per element_at reference — measured 5x the CPU
-    * of the whole query. The intermediate alias is multiply-referenced and
-    * non-cheap, so CollapseProject keeps the stage boundary.
-    */
-  def explodedShinglesAll(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), Text.shingles(col("__toks"), n).as("__shs"))
-      .select(col(idCol), explode(col("__shs")).as("shingle"))
-
-  /** Distinct word-`n`-gram shingle set per doc, exploded:
-    * (id, shingle). The building block for jaccard; minhash skips the
-    * distinct (min over a multiset equals min over its set).
-    */
-  def explodedShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    explodedShinglesAll(df, idCol, textCol, n).distinct()
-
   /** Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle,
     * thresholded. The shared-shingle equi-join IS the blocking: pairs with
     * zero overlap never meet. `maxShingleDf` drops ubiquitous shingles

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Det, Tables}
+import graft.core.{Det, Scratch, Tables}
+import Fixtures._
 
 /** Round-5 additions: skyline (Pareto frontier), exact grouped Spearman
   * rank correlation, CUSUM changepoint detection. Same contract as every
@@ -592,7 +593,6 @@ object Frontier {
       abs(
         (col("pt") - col("nt")) * (v - col("pv")) -
           (col("pt") - tSec) * (col("nv") - col("pv"))) / lit(2.0))
-    val wMax = Window.partitionBy(col("event_type")).orderBy(col("b"))
     val sel = withNbrs
       .withColumn("maxb", max(col("b")).over(Window.partitionBy(col("event_type"))))
       .withColumn("area", when(col("pt").isNull || col("nt").isNull, lit(null)).otherwise(area))
@@ -1153,20 +1153,9 @@ object Frontier {
     * merge's own staging dirs).
     */
   def q177(s: SparkSession, d: String): DataFrame = {
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    def stats(df: DataFrame): DataFrame = df
-      .groupBy(to_date(col("ts")).as("day"), col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    def stats(df: DataFrame): DataFrame = dayStats(df, "user_id")
     val ev = Tables.events(s, d)
-    // keyed by data dir AND the Spark app id: concurrent runs over the same
-    // fixture (Verify + Bench on one box) must not race on delete-then-
-    // rewrite, and distinct data dirs must not collide via hashCode
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q177_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    val root = Scratch.root(s, d, "q177")
     graft.sources.Sources
       .writeParquet(
         stats(ev.filter(col("event_type") =!= "purchase")).repartition(col("day")),

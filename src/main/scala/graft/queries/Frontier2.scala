@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
+import Fixtures._
 import graft.functions.Text
 
 /** Round-6 additions: format-interchange proof, embedding-quantization
@@ -30,15 +31,7 @@ object Frontier2 {
     */
   def q180(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    // keyed by data dir AND the Spark app id: concurrent runs over the same
-    // fixture (Verify + Bench on one box) must not race on delete-then-
-    // rewrite, and distinct data dirs must not collide via hashCode
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q180_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    val root = Scratch.root(s, d, "q180")
     graft.sources.Sources.writeOrc(ev, root.toString)
     graft.sources.Sources
       .readOrc(s, root.toString)
@@ -576,16 +569,8 @@ object Frontier2 {
     */
   def q189(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q189_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val root = Scratch.root(s, d, "q189")
+    val stats = dayStats(ev)
     graft.sources.Sources.writeParquet(stats.repartition(8), root.toString, Seq("day"))
     graft.sources.Sources.compactInPlace(s, root.toString)
     graft.sources.Snapshots
@@ -624,16 +609,8 @@ object Frontier2 {
     */
   def q190(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q190_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val root = Scratch.root(s, d, "q190")
+    val stats = dayStats(ev)
     graft.sources.Sources.writeParquet(stats.repartition(col("day")), root.toString, Seq("day"))
     val v1 = graft.sources.Snapshots.commit(s, root.toString)
     graft.sources.Sources.deleteWhere(s, root.toString, col("event_type") === "click")
@@ -669,19 +646,8 @@ object Frontier2 {
     */
   def q184(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    // keyed by data dir AND the Spark app id: concurrent runs over the same
-    // fixture (Verify + Bench on one box) must not race on delete-then-
-    // rewrite, and distinct data dirs must not collide via hashCode
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q184_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val root = Scratch.root(s, d, "q184")
+    val stats = dayStats(ev)
     // one file per day dir (a day's stats rows co-located): the GDPR
     // delete below then touches exactly one file per partition instead of
     // every scattered fragment
@@ -732,19 +698,11 @@ object Frontier2 {
     */
   def q192(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q192_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val root = Scratch.root(s, d, "q192")
+    val stats = dayStats(ev)
     graft.sources.Sources.writeParquet(stats.repartition(col("day")), root.toString, Seq("day"))
     val v1 = graft.sources.Snapshots.commit(s, root.toString, Seq("day", "n"))
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head.getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val (lo, hi) = (m.plusDays(2).toString, m.plusDays(5).toString)
     graft.sources.Snapshots
       .readSnapshot(s, root.toString, v1, prune = Seq(("day", lo, hi)))
@@ -785,21 +743,13 @@ object Frontier2 {
     */
   def q195(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q195_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString) // reaped at JVM exit, not leaked
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val root = Scratch.root(s, d, "q195")
+    val stats = dayStats(ev)
     // one file per day dir: manifest-level day pruning is then file-exact,
     // the precondition countRows documents
     graft.sources.Sources.writeParquet(stats.repartition(col("day")), root.toString, Seq("day"))
     val v1 = graft.sources.Snapshots.commit(s, root.toString, Seq("day"))
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head.getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val n = graft.sources.Snapshots.countRows(
       s,
       root.toString,

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
+import Fixtures._
 
 /** Round-9 continuation registry: the SQL face of the snapshot table
   * format ([[graft.sources.snap.GraftCatalog]]) — time travel, manifest
@@ -30,15 +31,8 @@ object Frontier3 {
     stagedStats.computeIfAbsent(
       s"$d|${s.sparkContext.applicationId}",
       _ => {
-        val ev = Tables.events(s, d)
-        val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-        val p = new org.apache.hadoop.fs.Path(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_statstage_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-        graft.core.Scratch.register(p.toString)
-        ev.groupBy(to_date(col("ts")).as("day"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
-          .write.mode("overwrite").parquet(p.toString)
+        val p = Scratch.root(s, d, "statstage")
+        dayStats(Tables.events(s, d)).write.mode("overwrite").parquet(p.toString)
         p.toString
       })
 
@@ -56,11 +50,7 @@ object Frontier3 {
       s"$d|${s.sparkContext.applicationId}",
       _ => {
         val ev = Tables.events(s, d)
-        val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-        val p = new org.apache.hadoop.fs.Path(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_microstage_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-        graft.core.Scratch.register(p.toString)
+        val p = Scratch.root(s, d, "microstage")
         val src = ev.select(
           col("ts"), col("event_type"), micro.as("u"), to_date(col("ts")).as("day"))
         val tsKey = "spark.sql.parquet.outputTimestampType"
@@ -109,21 +99,13 @@ object Frontier3 {
     * query-private catalog.
     */
   private def statsTable(s: SparkSession, d: String, tag: String, statsCols: Seq[String]): (String, String) = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString) // reaped at JVM exit, not leaked
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, tag)
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val stats = s.read.parquet(stagedStatsDir(s, d))
       .select(col("day"), col("event_type"), col("n"), col("sum_u"))
     graft.sources.Sources.writeParquet(stats.repartition(col("day")), dir, Seq("day"))
     graft.sources.Snapshots.commit(s, dir, statsCols)
-    val cat = s"${tag}_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
-    (cat, dir)
+    (catalog(s, d, tag, base), dir)
   }
 
   // -- q196: SQL time travel through the snapshot catalog ---------------
@@ -182,12 +164,7 @@ object Frontier3 {
     */
   def q197(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq197", Seq("day"))
-    val m = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
+    val m = firstDay(s, d)
     val (lo, hi) = (m.plusDays(2).toString, m.plusDays(5).toString)
     s.sql(s"""
       |SELECT (SELECT count(*) FROM $cat.ev) AS n_rows,
@@ -305,12 +282,7 @@ object Frontier3 {
     */
   def q200(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq200_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq200")
     val dir = new org.apache.hadoop.fs.Path(base, "corpus").toString
     val corpus = docs.filter(col("doc_id") % 10 < 8)
     graft.sources.Sources.writeParquet(corpus.repartition(4), dir)
@@ -359,12 +331,7 @@ object Frontier3 {
     */
   def q201(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq201", Seq("day"))
-    val m = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
     s.sql(s"""
@@ -413,24 +380,14 @@ object Frontier3 {
     */
   def q202(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq202_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq202")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val stats = dayStats(ev)
     stats.repartition(8).write.parquet(dir) // round-robin: no day locality
     graft.sources.Snapshots.commit(s, dir, Seq("day")) // v1: every file spans all days
     graft.sources.Sources.clusterInPlace(s, dir, col("day"), 8) // commits v2
-    val cat = s"snapq202_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val cat = catalog(s, d, "snapq202", base)
+    val m = firstDay(s, d)
     val (lo, hi) = (m.plusDays(1).toString, m.plusDays(4).toString)
     s.sql(s"""
       |SELECT pre.event_type AS event_type,
@@ -476,12 +433,7 @@ object Frontier3 {
     */
   def q203(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq203", Seq("day"))
-    val m = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     graft.sources.Sources.updateWhere(
       s,
@@ -533,22 +485,14 @@ object Frontier3 {
     */
   def q204(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq204_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq204")
     val dir = new org.apache.hadoop.fs.Path(base, "users").toString
     val users = ev
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), sum(micro).as("u"))
     users.repartition(8).write.parquet(dir) // round-robin: stats can't prune a point
     graft.sources.Snapshots.commit(s, dir, Seq("user_id"), Seq("user_id"))
-    val cat = s"snapq204_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq204", base)
     val b = ev.agg(min(col("user_id")).as("lo"), max(col("user_id")).as("hi")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     s.sql(s"""
@@ -634,17 +578,9 @@ object Frontier3 {
     */
   def q206(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq206_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq206")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val stats = dayStats(ev)
     // two interleaved appends: every day dir ends up with two small files
     graft.sources.Sources.writeParquet(
       stats.filter(col("event_type").isin("click", "view", "error")).repartition(col("day")),
@@ -658,9 +594,7 @@ object Frontier3 {
       .partitionBy("day")
       .parquet(dir)
     graft.sources.Snapshots.commit(s, dir, Seq("day"))
-    val cat = s"snapq206_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq206", base)
     s.sql(s"CALL $cat.compact(table => 'ev')").collect()
     s.sql(s"CALL $cat.vacuum(table => 'ev', keep_last => 1)").collect()
     s.sql(s"""
@@ -690,27 +624,16 @@ object Frontier3 {
     */
   private def flatStatsTable(s: SparkSession, d: String, tag: String): (String, String) = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, tag)
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val stats = dayStats(ev)
     stats
       .repartitionByRange(8, col("day"))
       .sortWithinPartitions(col("day"))
       .write
       .parquet(dir)
     graft.sources.Snapshots.commit(s, dir, Seq("day"))
-    val cat = s"${tag}_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
-    (cat, dir)
+    (catalog(s, d, tag, base), dir)
   }
 
   // -- q207: SQL UPDATE through group-based row-level operations ----------
@@ -731,12 +654,7 @@ object Frontier3 {
     */
   def q207(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = flatStatsTable(s, d, "snapq207")
-    val m = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     s.sql(s"""
       |UPDATE $cat.ev SET n = n * 2, sum_u = sum_u + n
@@ -769,8 +687,7 @@ object Frontier3 {
   def q208(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = flatStatsTable(s, d, "snapq208")
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     val matchedDelta = ev
       .filter(col("event_type") === "click" && to_date(col("ts")) <= to_date(lit(cut)))
@@ -833,12 +750,7 @@ object Frontier3 {
     * able, stats-complete commits with no foreachBatch glue.
     */
   def q209(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq209_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq209")
     val dir = new org.apache.hadoop.fs.Path(base, "sink").toString
     // seed: a snapshot table IS a dir with committed manifests — one
     // sentinel row the oracle reproduces
@@ -849,9 +761,7 @@ object Frontier3 {
       .write
       .parquet(dir)
     graft.sources.Snapshots.commit(s, dir, Seq("event_id"))
-    val cat = s"snapq209_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq209", base)
     val inDir = stageEventsIn(s, d, base)
     val q = graft.streaming.Streaming
       .readEventStream(s, inDir)
@@ -901,25 +811,11 @@ object Frontier3 {
     * pinned or live — ever opens a file it wouldn't have anyway.
     */
   def q210(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq210_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    fs.mkdirs(base)
-    val cat = s"snapq210_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val base = Scratch.root(s, d, "snapq210")
+    base.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(base)
+    val cat = catalog(s, d, "snapq210", base)
     Tables.events(s, d).createOrReplaceTempView("graft_q210_events")
-    val cutoff = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
-      .plusDays(4)
-      .toString
+    val cutoff = firstDay(s, d).plusDays(4).toString
     // v1: CREATE TABLE (empty, declared schema) + v2: the CTAS append
     s.sql(s"""
       |CREATE TABLE $cat.t AS
@@ -978,25 +874,11 @@ object Frontier3 {
     * right if both read under one bigint column.
     */
   def q211(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq211_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    fs.mkdirs(base)
-    val cat = s"snapq211_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val base = Scratch.root(s, d, "snapq211")
+    base.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(base)
+    val cat = catalog(s, d, "snapq211", base)
     Tables.events(s, d).createOrReplaceTempView("graft_q211_events")
-    val cutoff = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
-      .plusDays(4)
-      .toString
+    val cutoff = firstDay(s, d).plusDays(4).toString
     s.sql(s"CREATE TABLE $cat.w (event_type STRING, u INT)")
     s.sql(s"""
       |INSERT INTO $cat.w
@@ -1044,28 +926,12 @@ object Frontier3 {
     * checkpoint-resumable, each epoch time-travelable on both sides.
     */
   def q212(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq212_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    fs.mkdirs(base)
-    val cat = s"snapq212_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val base = Scratch.root(s, d, "snapq212")
+    base.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(base)
+    val cat = catalog(s, d, "snapq212", base)
     val ev = Tables.events(s, d)
-    val cutoff = ev
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
-      .plusDays(4)
-      .toString
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val cutoff = firstDay(s, d).plusDays(4).toString
+    val stats = dayStats(ev)
     val srcDir = new org.apache.hadoop.fs.Path(base, "ev").toString
     // v1: the early slice, committed with the day-stats discipline
     graft.sources.Sources.writeParquet(
@@ -1119,12 +985,7 @@ object Frontier3 {
     * manifest-aggregate queries q213/q216/q217.
     */
   private def eventsDayTable(s: SparkSession, d: String, tag: String): String = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, tag)
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val rows = Tables
       .events(s, d)
@@ -1136,10 +997,7 @@ object Frontier3 {
           .as("cat"))
     graft.sources.Sources.writeParquet(rows.repartition(col("day")), dir, Seq("day"))
     graft.sources.Snapshots.commit(s, dir, Seq("day", "user_id", "cat"))
-    val cat = s"${tag}_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
-    cat
+    catalog(s, d, tag, base)
   }
 
   /** Every DSv2 scan description in a frame's optimized plan (V1-bridged
@@ -1198,19 +1056,13 @@ object Frontier3 {
       |  CAST(count(*) AS BIGINT) AS n_rows
       |FROM events""".stripMargin
 
-  /** Run `body` with session confs set, restoring previous values — the
-    * SPJ/DPP demos flip real Spark confs and must leave the shared
-    * Verify/Bench session exactly as found.
-    */
   /** Corrupt a committed data file in place (checksum sidecar removed so
     * the junk bytes are readable as bytes, unreadable as parquet): the
     * zero-opens canary — any plan that opens the file dies loudly, so a
     * green query PROVES the file was never read. Shared by q234/q237.
     */
-  private def corruptFile(
-      s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      file: org.apache.hadoop.fs.Path): Unit = {
+  private def corruptFile(s: SparkSession, file: org.apache.hadoop.fs.Path): Unit = {
+    val fs = file.getFileSystem(s.sparkContext.hadoopConfiguration)
     val crc = new org.apache.hadoop.fs.Path(file.getParent, s".${file.getName}.crc")
     if (fs.exists(crc)) fs.delete(crc, false)
     val out = fs.create(file, true)
@@ -1218,6 +1070,10 @@ object Frontier3 {
     finally out.close()
   }
 
+  /** Run `body` with session confs set, restoring previous values — the
+    * SPJ/DPP demos flip real Spark confs and must leave the shared
+    * Verify/Bench session exactly as found.
+    */
   private def withConfs(s: SparkSession, pairs: (String, String)*)(body: => DataFrame): DataFrame = {
     val prev = pairs.map { case (k, _) => k -> s.conf.getOption(k) }
     pairs.foreach { case (k, v) => s.conf.set(k, v) }
@@ -1255,20 +1111,10 @@ object Frontier3 {
     * raw events and joins them in DuckDB.
     */
   def q214(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq214_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    val cat = s"snapq214_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val base = Scratch.root(s, d, "snapq214")
+    val cat = catalog(s, d, "snapq214", base)
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val byType = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val byType = dayStats(ev)
     val byUser = ev
       .groupBy(to_date(col("ts")).as("day"), col("user_id"))
       .agg(count(lit(1)).as("n_ev"))
@@ -1340,24 +1186,14 @@ object Frontier3 {
     * result the join needed anyway.
     */
   def q215(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq215_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
-    val cat = s"snapq215_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val base = Scratch.root(s, d, "snapq215")
+    val cat = catalog(s, d, "snapq215", base)
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val stats = ev
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val stats = dayStats(ev)
     val factDir = new org.apache.hadoop.fs.Path(base, "fact").toString
     graft.sources.Sources.writeParquet(stats.repartition(col("day")), factDir, Seq("day"))
     graft.sources.Snapshots.commit(s, factDir, Seq("day"))
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head.getDate(0).toLocalDate
+    val m = firstDay(s, d)
     // dim TABLE (a folded local relation would not carry the selective
     // Filter the pruning rule requires): every day, tagged; only the
     // window keeps
@@ -1468,12 +1304,7 @@ object Frontier3 {
     */
   def q217(s: SparkSession, d: String): DataFrame = {
     val cat = eventsDayTable(s, d, "snapq217")
-    val m = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head
-      .getDate(0)
-      .toLocalDate
+    val m = firstDay(s, d)
     val window = (2L to 5L).map(i => s"DATE'${m.plusDays(i)}'").mkString(", ")
     val df = s.sql(s"""
       |SELECT day, count(*) AS n_rows, count(cat) AS n_cat, min(user_id) AS min_uid
@@ -1550,8 +1381,7 @@ object Frontier3 {
   def q218(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq218", Seq("day"))
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     val matchedDelta = ev
       .filter(col("event_type") === "click" && to_date(col("ts")) <= to_date(lit(cut)))
@@ -1624,12 +1454,7 @@ object Frontier3 {
     * the first trigger.
     */
   def q219(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq219_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq219")
     val dir = new org.apache.hadoop.fs.Path(base, "sink").toString
     // seed: one sentinel row in its own day partition — the table's hive
     // layout is established before the stream starts
@@ -1641,9 +1466,7 @@ object Frontier3 {
       .partitionBy("day")
       .parquet(dir)
     graft.sources.Snapshots.commit(s, dir, Seq("day", "event_id"))
-    val cat = s"snapq219_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq219", base)
     val inDir = stageEventsIn(s, d, base)
     val q = graft.streaming.Streaming
       .readEventStream(s, inDir)
@@ -1706,8 +1529,7 @@ object Frontier3 {
     */
   def q220(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq220", Seq("day"))
-    val ev = Tables.events(s, d)
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     // v2: DELETE with a non-partition conjunct — the partitioned rewrite
     s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
@@ -1992,8 +1814,7 @@ object Frontier3 {
   def q222(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq222", Seq("day"))
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
     ev.filter(to_date(col("ts")) <= to_date(lit(cut)))
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
@@ -2050,12 +1871,7 @@ object Frontier3 {
     */
   def q225(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq225", Seq("day", "n"))
-    val m = Tables
-      .events(s, d)
-      .agg(min(to_date(col("ts"))).as("m"))
-      .head()
-      .getDate(0)
-      .toLocalDate
+    val m = firstDay(s, d)
     val (lo, hi) = (m.plusDays(2).toString, m.plusDays(5).toString)
     val mfBytes = new java.io.File(
       new java.io.File(dir, "_graft_manifests"),
@@ -2119,12 +1935,7 @@ object Frontier3 {
     */
   def q224(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Layout
-    val root = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_q224_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(root.toString)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    val root = Scratch.root(s, d, "q224")
     val dims = Tables
       .orders(s, d)
       .select(
@@ -2174,7 +1985,7 @@ object Frontier3 {
   // -- q226: merge-on-read DELETE (deletion vectors) ----------------------
 
   /** SQL DELETE priced as METADATA, not data: with
-    * `spark.graft.delete.mode=mor` the catalog routes `DELETE FROM` to
+    * `spark.graft.rowlevel.mode=mor` the catalog routes `DELETE FROM` to
     * [[graft.sources.DeleteVectors.deleteWhere]] — matched row POSITIONS
     * land in hidden sidecars, the manifest delta re-states the touched
     * files' DV pointers, and not one data file is rewritten. The hash
@@ -2191,7 +2002,7 @@ object Frontier3 {
   def q226(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq226", Seq("day"))
     val files1 = graft.sources.Snapshots.files(s, dir).toSet
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     // sticky MoR: no conf this time — the table already carries DVs
@@ -2244,9 +2055,9 @@ object Frontier3 {
     */
   def q227(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq227", Seq("day"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // superset: overlap merges
     }
@@ -2292,7 +2103,7 @@ object Frontier3 {
     */
   def q228(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq228", Seq("day"))
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     s.sql(s"UPDATE $cat.ev SET n = n * 2 WHERE event_type = 'view'")
@@ -2329,9 +2140,9 @@ object Frontier3 {
     */
   def q229(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq229", Seq("day"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
@@ -2370,7 +2181,7 @@ object Frontier3 {
     */
   def q230(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq230", Seq("day"))
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     val rewritten =
@@ -2515,9 +2326,7 @@ object Frontier3 {
       () => statsTable(s, d, "snapq238a", Seq("day")),
       () => statsTable(s, d, "snapq238b", Seq("day")))
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val perDay = ev.groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).cast("long").as("n"), sum(micro).as("sum_u"))
+    val perDay = dayStats(ev)
     val changes = perDay
       .filter(col("event_type") === "click")
       .select(lit("d").as("op"), col("day"), col("event_type"), col("n"), col("sum_u"))
@@ -2618,12 +2427,7 @@ object Frontier3 {
     * per-column `distinctCount`.
     */
   def q237(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq237_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq237")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val ev = Tables
       .events(s, d)
@@ -2649,7 +2453,7 @@ object Frontier3 {
       .getLong(0)
     // zero-opens canary: junk one data file; the estimate must not notice
     val victim = graft.sources.Snapshots.files(s, dir).head
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val est = graft.sources.Snapshots
       .approxCountDistinct(s, dir, "user_id")
       .getOrElse(sys.error("NDV sidecars missing — the commit discipline did not build them"))
@@ -2711,7 +2515,7 @@ object Frontier3 {
     val pinnedV =
       s.sql(s"CALL $cat.create_ref(table => 'ev', name => 'prelaunch')").head().getLong(0)
     val zeroCopy = graft.sources.Snapshots.files(s, dir).toSet == filesBefore
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // v2
     }
     s.sql(s"""
@@ -2775,7 +2579,6 @@ object Frontier3 {
       () => statsTable(s, d, "snapq235a", Seq("day")),
       () => statsTable(s, d, "snapq235b", Seq("day")))
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
     val updates = ev
       .filter(col("event_type") === "view")
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
@@ -2892,9 +2695,7 @@ object Frontier3 {
     val v1 = graft.sources.Snapshots.latestVersion(s, dir)
     s.sql(s"CALL $cat.create_branch(table => 'ev', name => 'replay')")
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val perDay = ev.groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).cast("long").as("n"), sum(micro).as("sum_u"))
+    val perDay = dayStats(ev)
     // epoch 0: one synthetic insert; epoch 1: the full change algebra PLUS
     // a second synthetic key on the SAME day — the two epochs land two
     // files in one partition dir, exactly the small-files accumulation
@@ -3001,7 +2802,7 @@ object Frontier3 {
     */
   def q243(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq243", Seq("day"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val v1 = graft.sources.Snapshots.latestVersion(s, dir)
     s.sql(s"CALL $cat.create_branch(table => 'ev', name => 'replay')")
     s.sql(s"CALL $cat.branch_delete(table => 'ev', name => 'replay', " +
@@ -3015,7 +2816,7 @@ object Frontier3 {
     // delete vectoring a file the branch vectored too
     s.sql(s"INSERT INTO $cat.ev (day, event_type, n, sum_u) " +
       "VALUES (DATE'1999-12-31', '__main', CAST(1 AS BIGINT), CAST(10 AS BIGINT))")
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$m'")
     }
     val divergeRefused = scala.util
@@ -3076,20 +2877,12 @@ object Frontier3 {
     */
   def q242(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq242_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq242")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     // rev = micro-cents × 0.01, EXACT in the decimal domain (never a
     // double): sum(rev) * 100 == sum(micro) by construction — the oracle
     // hashes integer cents
-    val stats = Tables.events(s, d)
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(micro).as("sum_u"))
+    val stats = dayStats(Tables.events(s, d))
       .withColumn(
         "rev",
         (col("sum_u").cast(org.apache.spark.sql.types.DecimalType(24, 0)) *
@@ -3098,14 +2891,12 @@ object Frontier3 {
       .drop("sum_u")
     graft.sources.Sources.writeParquet(stats.repartition(col("day")), dir, Seq("day"))
     graft.sources.Snapshots.commit(s, dir, Seq("day", "n", "rev"), Seq("event_type"))
-    val cat = s"snapq242_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
-    val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val cat = catalog(s, d, "snapq242", base)
+    val m = firstDay(s, d)
     // the zero-opens canary BEFORE any aggregate runs (the q239 proof)
     val victimDay = m.plusDays(3).toString
     val victim = graft.sources.Snapshots.files(s, dir).find(_.startsWith(s"day=$victimDay/")).get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val clean = s.sql(s"""
       |SELECT sum(rev) AS rev_all, avg(rev) AS avg_rev,
       |       sum(n) AS n_all, count(*) AS n_groups FROM $cat.ev""".stripMargin)
@@ -3124,7 +2915,7 @@ object Frontier3 {
         .divide(new java.math.BigDecimal(nGroups), 6, java.math.RoundingMode.HALF_UP)) == 0
     // merge-on-read: vector one day's clicks — the same SUM goes hybrid,
     // scanning exactly the one DV'd file (the corrupt file stays folded)
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     }
     val hybrid = s.sql(s"SELECT sum(rev) AS rev_after FROM $cat.ev")
@@ -3262,7 +3053,7 @@ object Frontier3 {
       s, dir, "dev",
       s.sql("SELECT DATE'1999-12-31' AS day, '__branch' AS event_type, " +
         "CAST(7 AS BIGINT) AS n, CAST(42 AS BIGINT) AS sum_u"))
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     val divergeRefused = scala.util
@@ -3333,12 +3124,11 @@ object Frontier3 {
     // second commit declares the bloom discipline: the sidecar pass runs
     // here and records every file's sums (all files are bloom-new)
     graft.sources.Snapshots.commit(s, dir, Seq("day", "n", "sum_u"), Seq("event_type"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     // the zero-opens canary BEFORE any aggregate runs (the q234 proof)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
     val victimDay = m.plusDays(3).toString
     val victim = graft.sources.Snapshots.files(s, dir).find(_.startsWith(s"day=$victimDay/")).get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val clean = s.sql(s"""
       |SELECT sum(n) AS sum_all, sum(sum_u) AS sum_u_all,
       |       avg(n) AS avg_all, count(*) AS n_groups FROM $cat.ev""".stripMargin)
@@ -3349,7 +3139,7 @@ object Frontier3 {
     val row1 = clean.head()
     // merge-on-read: vector one day's clicks, the same SUM goes hybrid —
     // sidecar folds for every clean file, ONE bounded scan of the DV'd one
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     }
     val hybrid = s.sql(s"SELECT sum(n) AS sum_after FROM $cat.ev")
@@ -3400,17 +3190,16 @@ object Frontier3 {
     */
   def q234(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq234", Seq("day", "n"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    val m = firstDay(s, d)
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     }
     // corrupt a CLEAN day's data file (crc sidecar removed, bytes junked):
     // its manifest stats still answer, but any read of it now fails — the
     // canary that proves only the DV'd file is opened
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
     val victimDay = m.plusDays(3).toString
     val victim = graft.sources.Snapshots.files(s, dir).find(_.startsWith(s"day=$victimDay/")).get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     def agg() = s.sql(s"""
       |SELECT count(*) AS n_rows, count(n) AS n_vals,
       |       min(n) AS min_n, max(n) AS max_n FROM $cat.ev""".stripMargin)
@@ -3471,9 +3260,9 @@ object Frontier3 {
     */
   def q233(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq233", Seq("day"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'") // v2
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$cut'") // v3
     }
@@ -3539,7 +3328,7 @@ object Frontier3 {
     val (cat, dir) = statsTable(s, d, "snapq245", Seq("day", "event_type"))
     val base = new org.apache.hadoop.fs.Path(dir).getParent
     val mvDir = new org.apache.hadoop.fs.Path(base, "daily").toString
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     s.sql(s"CALL $cat.mv_create(mv => 'daily', source => 'ev', keys => 'day', " +
       "aggs => 'count(*) AS n_types; sum(n) AS n_tot; sum(sum_u) AS u_tot; max(sum_u) AS u_max')")
     // window 1: one day loses its click row (its max must re-derive) and
@@ -3560,8 +3349,7 @@ object Frontier3 {
       .files(s, dir)
       .find(_.startsWith(s"day=${m.plusDays(4)}/"))
       .get
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val r1 = graft.sources.Mv.refresh(s, mvDir)
     val incr1Ok = !r1.fullResync && r1.groupsRecomputed == 2L && r1.groupsDeleted == 0L
     // window 2, through the SQL face: a whole day vanishes → its group deletes
@@ -3616,7 +3404,7 @@ object Frontier3 {
     */
   def q246(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq246", Seq("day"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     // v2: a COW delete rewrites day m's file (the old one archives)
     graft.sources.Sources.deleteWhere(
       s,
@@ -3699,7 +3487,7 @@ object Frontier3 {
     */
   def q247(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq247", Seq("day"))
-    val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
+    val m = firstDay(s, d)
     // a check the existing data violates must refuse, with the count
     val dirtyRefused =
       try {
@@ -3840,12 +3628,7 @@ object Frontier3 {
     * slowly-changing-dimension update prices at the changed dim keys.
     */
   def q249(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq249_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq249")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val dimDir = new org.apache.hadoop.fs.Path(base, "dim").toString
     val mvDir = new org.apache.hadoop.fs.Path(base, "bycat").toString
@@ -3872,9 +3655,7 @@ object Frontier3 {
         graft.sources.Sources.writeParquet(dim.repartition(1), dimDir)
         graft.sources.Snapshots.commit(s, dimDir, Seq("et"))
       })
-    val cat = s"snapq249_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq249", base)
     s.sql(s"CALL $cat.mv_create(mv => 'bycat', source => 'ev', keys => 'category', " +
       "aggs => 'count(*) AS n_rows; sum(n) AS n_tot; sum(sum_u) AS u_tot; sum(n * wt) AS nw_tot', " +
       "dims => 'dim ON event_type=et')").collect()
@@ -3892,7 +3673,7 @@ object Frontier3 {
       .files(s, dir)
       .find(_.startsWith("event_type=purchase/"))
       .get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val r1 = graft.sources.Mv.refresh(s, mvDir)
     val incr1Ok = !r1.fullResync && r1.groupsRecomputed == 1L && r1.groupsDeleted == 0L
     // window 2: every `error` row merge-on-read deletes — `ops` vanishes
@@ -3963,12 +3744,7 @@ object Frontier3 {
     * join keys' files, never the fact table.
     */
   def q253(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq253_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq253")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val dimDir = new org.apache.hadoop.fs.Path(base, "dim").toString
     val mvDir = new org.apache.hadoop.fs.Path(base, "bycat").toString
@@ -3995,9 +3771,7 @@ object Frontier3 {
         graft.sources.Sources.writeParquet(dim.repartition(1), dimDir)
         graft.sources.Snapshots.commit(s, dimDir, Seq("et"))
       })
-    val cat = s"snapq253_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq253", base)
     s.sql(s"""CREATE MATERIALIZED VIEW $cat.bycat AS
       |SELECT category, event_type, count(*) AS n_rows, sum(n) AS n_tot, sum(sum_u) AS u_tot
       |FROM $cat.ev LEFT JOIN $cat.dim d ON event_type = d.et
@@ -4009,7 +3783,7 @@ object Frontier3 {
       .files(s, dir)
       .find(_.startsWith("event_type=purchase/"))
       .get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val r1 = graft.sources.Mv.refresh(s, mvDir)
     val incr1Ok = !r1.fullResync && r1.groupsRecomputed == 1L && r1.groupsDeleted == 0L
     // window 2: the late-arriving dim row — 'zzz' re-maps out of the bucket
@@ -4082,7 +3856,7 @@ object Frontier3 {
         graft.sources.Snapshots.commit(s, dimDir, Seq("et"))
       },
       () =>
-        Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate)
+        firstDay(s, d))
     s.sql(s"""CREATE MATERIALIZED VIEW $cat.daily_eng AS
       |SELECT day, count(*) AS n_rows, sum(n) AS n_tot, sum(sum_u) AS u_tot
       |FROM $cat.ev JOIN $cat.dim d ON event_type = d.et
@@ -4200,12 +3974,7 @@ object Frontier3 {
     * .DeleteVectors.candidateRelsForKeys]]'s null-safe arm).
     */
   def q252(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq252_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq252")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val mvDir = new org.apache.hadoop.fs.Path(base, "bykey").toString
     val stats = s.read.parquet(stagedStatsDir(s, d))
@@ -4229,7 +3998,7 @@ object Frontier3 {
       .files(s, dir)
       .find(_.startsWith("event_type=view/"))
       .get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val mvV0 = graft.sources.Snapshots.latestVersion(s, mvDir)
     val r1 = graft.sources.Mv.refresh(s, mvDir)
     val incr1Ok = !r1.fullResync && r1.groupsRecomputed == 1L && r1.groupsDeleted == 0L
@@ -4299,12 +4068,7 @@ object Frontier3 {
     * view a time-series user creates.
     */
   def q254(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq254_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq254")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val mvDir = new org.apache.hadoop.fs.Path(base, "hourly").toString
     // the micros copy stages once per (dir, app) — the bench's second
@@ -4313,9 +4077,7 @@ object Frontier3 {
     copyStaged(s, stagedMicrosEventsDir(s, d), dir)
     graft.sources.Snapshots.commit(s, dir, Seq("day", "ts", "event_type"), Seq("event_type"))
     val src = s.read.parquet(dir).select(col("ts"), col("event_type"), col("u"), col("day"))
-    val cat = s"snapq254_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq254", base)
     // the MV create and the day-span probe both only READ the committed
     // table — overlap them (guide §2.6)
     val (_, Array(mn, mx)) = graft.core.Par.two(
@@ -4337,7 +4099,7 @@ object Frontier3 {
       .files(s, dir)
       .find(_.startsWith(s"day=$mn/"))
       .get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     val r1 = s.sql(s"REFRESH MATERIALIZED VIEW $cat.hourly").head()
     val incr1Ok = !r1.getBoolean(4) && r1.getLong(2) == 1L && r1.getLong(3) == 0L
     // window 2: merge-on-read DELETE of the MAX day's error rows — the
@@ -4385,8 +4147,6 @@ object Frontier3 {
     */
   def q255(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq255", Seq("day"))
-    val base = new org.apache.hadoop.fs.Path(dir).getParent
-    val mvDir = new org.apache.hadoop.fs.Path(base, "daily").toString
     s.sql(s"CREATE MATERIALIZED VIEW $cat.daily AS SELECT day, count(*) AS n_rows, " +
       s"sum(n) AS n_tot FROM $cat.ev GROUP BY day").collect()
     // the `daily` evolution windows and the `w`/`wmv` widen-refusal chain
@@ -4465,10 +4225,8 @@ object Frontier3 {
       !s.sql(s"SELECT stale FROM $cat.daily.mv").head().getBoolean(0)
     // the physical proof: EVERY fact data file corrupted — any plan that
     // opens one byte of the fact dies; the rewritten dashboard answers
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     graft.sources.Snapshots.files(s, dir).foreach(rel =>
-      corruptFile(s, fs, graft.sources.Snapshots.resolve(s, dir, rel)))
+      corruptFile(s, graft.sources.Snapshots.resolve(s, dir, rel)))
     val fin = dash()
     val rewrite2Ok = rewritten(fin)
     fin.orderBy("day")
@@ -4509,17 +4267,10 @@ object Frontier3 {
     * flipped members' keys, never the fact.
     */
   def q257(s: SparkSession, d: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq257_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq257")
     val ev = Tables.events(s, d)
-    val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")
     val evDir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val ndDir = new org.apache.hadoop.fs.Path(base, "nd").toString
-    val mvDir = new org.apache.hadoop.fs.Path(base, "bynation").toString
     val nd = Tables.nation(s, d)
       .select(col("n_nationkey").cast("long").as("nk"), col("n_name").as("grp"))
       .unionByName(s.range(1).select(lit(999L).as("nk"), lit("NOWHERE").as("grp")))
@@ -4537,9 +4288,7 @@ object Frontier3 {
         graft.sources.Sources.writeParquet(nd.repartition(1), ndDir)
         graft.sources.Snapshots.commit(s, ndDir, Seq("nk"))
       })
-    val cat = s"snapq257_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq257", base)
     s.sql(s"""CREATE MATERIALIZED VIEW $cat.bynation AS
       |SELECT grp, count(*) AS n_rows, sum(u) AS u_tot
       |FROM $cat.ev FULL OUTER JOIN $cat.nd d ON uk = d.nk
@@ -4551,7 +4300,7 @@ object Frontier3 {
     val createOk = nowhere() == ((1L, None))
     // the canary: uk=0's file is touched by NEITHER window
     val victim = graft.sources.Snapshots.files(s, evDir).find(_.startsWith("uk=0/")).get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(evDir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(evDir, victim))
     // window 1: the first uk=999 row — 'NOWHERE' flips to MATCHED
     s.sql(s"INSERT INTO $cat.ev VALUES (CAST(42 AS BIGINT), CAST(999 AS BIGINT))").collect()
     val r1 = s.sql(s"REFRESH MATERIALIZED VIEW $cat.bynation").head()
@@ -4599,12 +4348,7 @@ object Frontier3 {
     */
   def q256(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val base = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_snapq256_${java.lang.Integer.toHexString(d.hashCode)}_${s.sparkContext.applicationId}")
-    graft.core.Scratch.register(base.toString)
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) fs.delete(base, true)
+    val base = Scratch.root(s, d, "snapq256")
     val dir = new org.apache.hadoop.fs.Path(base, "ev").toString
     val mvDir = new org.apache.hadoop.fs.Path(base, "seasonal").toString
     // a deterministic 24-month spread: year from floor(event_id/12)%2 so
@@ -4624,9 +4368,7 @@ object Frontier3 {
     try graft.sources.Sources.writeParquet(src.repartition(col("ym")), dir, Seq("ym"))
     finally oldTs.fold(s.conf.unset(tsKey))(s.conf.set(tsKey, _))
     graft.sources.Snapshots.commit(s, dir, Seq("ym", "ts", "event_type"))
-    val cat = s"snapq256_${java.lang.Integer.toHexString(d.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.snap.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", base.toString)
+    val cat = catalog(s, d, "snapq256", base)
     s.sql(s"""CREATE MATERIALIZED VIEW $cat.seasonal AS
       |SELECT month(ts) AS m, count(*) AS n_rows, sum(u) AS u_tot
       |FROM $cat.ev GROUP BY 1""".stripMargin).collect()
@@ -4636,7 +4378,7 @@ object Frontier3 {
     // before both refreshes; a cyclic inverse that degraded to scanning
     // every candidate (or enumerated the wrong periods) dies here
     val victim = graft.sources.Snapshots.files(s, dir).find(_.startsWith("ym=2022-07/")).get
-    corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
+    corruptFile(s, new org.apache.hadoop.fs.Path(dir, victim))
     // window 1: INSERT one March-2023 row — affected month {3}; both
     // years' March files recompute, nothing else opens
     s.sql(s"INSERT INTO $cat.ev VALUES (TIMESTAMP'2023-03-15 12:00:00', 'click', " +

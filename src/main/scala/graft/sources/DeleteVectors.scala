@@ -69,18 +69,11 @@ object DeleteVectors {
   val DefaultMaxDeletedFraction = 0.9
 
   private def maxDeletedFraction(spark: SparkSession): Double =
-    spark.conf.getOption("spark.graft.dv.maxDeletedFraction") match {
-      case None => DefaultMaxDeletedFraction
-      case Some(s) =>
-        // refuse loudly: a silently-swallowed typo would re-enable (or a
-        // NaN would silently disable) auto-rewrites
-        val t = scala.util.Try(s.toDouble).getOrElse(sys.error(
-          s"spark.graft.dv.maxDeletedFraction must be a number in [0, 1], got '$s'"))
-        require(
-          !t.isNaN && t >= 0.0 && t <= 1.0,
-          s"spark.graft.dv.maxDeletedFraction must be in [0, 1], got '$s'")
-        t
-    }
+    // a silently-swallowed typo would re-enable (or a NaN would silently
+    // disable) auto-rewrites
+    graft.core.GraftSession.numConf(
+      spark, "spark.graft.dv.maxDeletedFraction", DefaultMaxDeletedFraction, "a number in [0, 1]")(
+      _.toDouble, t => t >= 0.0 && t <= 1.0)
 
   /** Merge-on-read DELETE: record the positions of rows matching
     * `predicate` as deletion vectors and commit the pointer update — no
@@ -496,16 +489,8 @@ object DeleteVectors {
     * ceiling itself (≤ a few MB of longs, a sort, a streamed write).
     */
   private def dvDriverWriteMaxRows(spark: SparkSession): Long =
-    spark.conf
-      .getOption("spark.graft.dv.driverWriteMaxRows")
-      .map(v =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"spark.graft.dv.driverWriteMaxRows must be a row count, got '$v'")
-        })
-      .getOrElse(1L << 18)
+    graft.core.GraftSession.numConf(
+      spark, "spark.graft.dv.driverWriteMaxRows", 1L << 18, "a row count")(_.toLong)
 
   /** Raw recorded rows across `rels` — the sound collect bound for a match
     * over those files (a match scan reads RAW rows, deleted included).

@@ -64,10 +64,8 @@ object Snapshots {
   val DefaultCheckpointInterval = 20
 
   private def checkpointEvery(spark: SparkSession): Int =
-    spark.conf
-      .getOption("spark.graft.snapshot.checkpointInterval")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(DefaultCheckpointInterval)
+    graft.core.GraftSession.numConf(
+      spark, "spark.graft.snapshot.checkpointInterval", DefaultCheckpointInterval, "an integer")(_.toInt)
 
   /** Set for the duration of [[checkpoint]]'s commit on ITS thread only —
     * forcing a full manifest without mutating session-shared conf (a conf
@@ -2767,18 +2765,8 @@ object Snapshots {
     * production tables with large files always take the distributed path.
     */
   private def sidecarDriverMaxBytes(spark: SparkSession): Long =
-    spark.conf
-      .getOption("spark.graft.sidecar.driverBuildMaxBytes")
-      .map(v =>
-        // a malformed value must fail naming the conf key, not throw a bare
-        // NumberFormatException from deep inside every commit (ADVICE r18)
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"spark.graft.sidecar.driverBuildMaxBytes must be a byte count, got '$v'")
-        })
-      .getOrElse(32L * 1024 * 1024)
+    graft.core.GraftSession.numConf(
+      spark, "spark.graft.sidecar.driverBuildMaxBytes", 32L * 1024 * 1024, "a byte count")(_.toLong)
 
   /** The driver-side twin of the distributed sidecar build — used for
     * small files only (see [[sidecarDriverMaxBytes]]). Produces

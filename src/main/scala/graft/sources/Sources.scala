@@ -183,16 +183,11 @@ object Sources {
   val DefaultRewriteTargetBytes: Long = 128L * 1024 * 1024
 
   private[sources] def rewriteTargetBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.rewrite.targetBytes") match {
-      case None => DefaultRewriteTargetBytes
-      case Some(s) =>
-        // refuse loudly — a silently-swallowed typo would quietly restore
-        // the single-monster-file behavior this conf exists to prevent
-        val t = scala.util.Try(s.toLong).getOrElse(
-          sys.error(s"spark.graft.rewrite.targetBytes must be a positive long, got '$s'"))
-        require(t > 0L, s"spark.graft.rewrite.targetBytes must be positive, got '$s'")
-        t
-    }
+    // a silently-swallowed typo would quietly restore the
+    // single-monster-file behavior this conf exists to prevent
+    graft.core.GraftSession.numConf(
+      spark, "spark.graft.rewrite.targetBytes", DefaultRewriteTargetBytes, "a positive long")(
+      _.toLong, _ > 0L)
 
   /** ceil(liveBytes / targetBytes), floored at one file. */
   private[sources] def rewriteFileCount(liveBytes: Long, targetBytes: Long): Int = {

@@ -375,15 +375,27 @@ object SnapTable {
     */
   val PosMetaCol = "_pos"
 
+  private val RowLevelModeKey = "spark.graft.rowlevel.mode"
+
   /** THE merge-on-read switch, one predicate for the whole DML surface:
-    * either conf flips SQL DELETE (the pushable SupportsDelete path) AND
-    * UPDATE/MERGE/un-pushable DELETE (the delta-based row-level path) to
-    * MoR together — a split surface (deletes rewriting files while
-    * updates write vectors) would be incoherent.
+    * `spark.graft.rowlevel.mode=mor` flips SQL DELETE (the pushable
+    * SupportsDelete path) AND UPDATE/MERGE/un-pushable DELETE (the
+    * delta-based row-level path) to MoR together — a split surface
+    * (deletes rewriting files while updates write vectors) would be
+    * incoherent. Unset or `cow` is copy-on-write; any other value, or the
+    * retired delete-only key, fails naming the surviving key.
     */
-  def morEnabled(spark: SparkSession): Boolean =
-    Seq("spark.graft.rowlevel.mode", "spark.graft.delete.mode").exists(k =>
-      spark.conf.getOption(k).exists(_.equalsIgnoreCase("mor")))
+  def morEnabled(spark: SparkSession): Boolean = {
+    val retiredKey = "spark.graft.delete.mode"
+    if (spark.conf.getOption(retiredKey).isDefined)
+      throw new IllegalArgumentException(s"$retiredKey is retired: set $RowLevelModeKey=mor (or cow) instead")
+    spark.conf.getOption(RowLevelModeKey).map(_.trim.toLowerCase(java.util.Locale.ROOT)) match {
+      case None | Some("cow") => false
+      case Some("mor") => true
+      case Some(v) =>
+        throw new IllegalArgumentException(s"$RowLevelModeKey must be cow or mor, got '$v'")
+    }
+  }
 }
 
 class SnapTable(val dir: String, version: Long, val branch: Option[String] = None)
@@ -528,7 +540,7 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(f => SnapFilters.toColumn(f).isDefined)
 
-  /** Delete mode: `spark.graft.delete.mode=mor` opts the session into
+  /** Delete mode: `spark.graft.rowlevel.mode=mor` opts the session into
     * merge-on-read (record deletion vectors, rewrite nothing); the default
     * stays copy-on-write. STICKY per table: once any file carries a DV,
     * later SQL deletes stay MoR regardless of the conf (the COW path reads
@@ -544,7 +556,7 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
             s"cannot translate delete predicate $f — canDeleteWhere should have refused it")))
       .reduceOption(_ && _)
       .getOrElse(lit(true))
-    // either MoR switch flips this path too — the pushable DELETE must
+    // the MoR switch flips this path too — the pushable DELETE must
     // not silently rewrite files while UPDATE/MERGE run merge-on-read
     val morConf = SnapTable.morEnabled(spark)
     // short-circuit: the O(files) stat sweep only runs when the conf

@@ -257,58 +257,6 @@ class SnapRowLevelScan(
   }
 }
 
-case class SnapFileInput(path: String) extends org.apache.spark.sql.connector.read.InputPartition
-
-case class SnapParquetReadFactory(schemaJson: String, conf: java.io.Serializable)
-    extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-
-  override def createReader(p: org.apache.spark.sql.connector.read.InputPartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[SnapFileInput].path
-    val required =
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // `_file` is OURS to produce, not parquet's: read the data columns,
-    // splice the partition's file path into the metadata slot per row
-    val fileIdx = required.fieldNames.indexOf(SnapTable.FileMetaCol)
-    val dataSchema =
-      if (fileIdx < 0) required
-      else StructType(required.fields.filterNot(_.name == SnapTable.FileMetaCol))
-    val reader = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-      new Path(path),
-      dataSchema,
-      org.apache.spark.sql.graft.Bridge.confOf(conf))
-    if (fileIdx < 0)
-      new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = { cur = reader.read(); cur != null }
-        override def get(): InternalRow = cur
-        override def close(): Unit = reader.close()
-      }
-    else {
-      val fileVal = org.apache.spark.unsafe.types.UTF8String.fromString(path)
-      val outIdx = required.fieldNames.zipWithIndex.collect {
-        case (n, i) if n != SnapTable.FileMetaCol => i
-      }
-      val dataTypes = dataSchema.fields.map(_.dataType)
-      new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = { cur = reader.read(); cur != null }
-        override def get(): InternalRow = {
-          val out = new Array[Any](required.length)
-          var i = 0
-          while (i < dataTypes.length) {
-            out(outIdx(i)) = if (cur.isNullAt(i)) null else cur.get(i, dataTypes(i))
-            i += 1
-          }
-          out(fileIdx) = fileVal
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-        }
-        override def close(): Unit = reader.close()
-      }
-    }
-  }
-}
-
 /** Commit message: one staged file written by one task. */
 case class SnapStagedFile(path: String, rows: Long) extends WriterCommitMessage
 

@@ -207,4 +207,32 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
     assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).isEmpty)
     assert(liveIdV(dir).contains((1L, 11.0)))
   }
+
+  test("pushable SQL DELETE under rowlevel.mode=mor records vectors and rewrites no data file") {
+    val (_, dir) = fixture("mord10")
+    val filesBefore = Snapshots.files(spark, dir).toSet
+    withMor(spark.sql("DELETE FROM mord10.ev WHERE id = 2"))
+    assert(Snapshots.files(spark, dir).toSet == filesBefore, "a data file was rewritten")
+    val dv = Snapshots.dvByRel(Snapshots.manifestView(spark, dir))
+    assert(dv.values.map(_._2).sum == 1L, s"one position deleted, got $dv")
+    assert(liveIdV(dir) == Set((1L, 10.0), (3L, 20.0), (4L, 30.0)))
+  }
+
+  // (conf, value) pairs the single MoR switch must refuse, by DML statement
+  private val badModes = Seq("spark.graft.delete.mode" -> "mor", "spark.graft.rowlevel.mode" -> "bogus")
+  private val dml = Seq(
+    "DELETE" -> "DELETE FROM %s.ev WHERE id = 2",
+    "UPDATE" -> "UPDATE %s.ev SET v = v * 2 WHERE id = 2")
+  for (((key, value), i) <- badModes.zipWithIndex; ((verb, stmt), j) <- dml.zipWithIndex)
+    test(s"SQL $verb with $key=$value fails naming spark.graft.rowlevel.mode") {
+      val cat = s"mordbad$i$j"
+      val (_, dir) = fixture(cat)
+      spark.conf.set(key, value)
+      val e =
+        try intercept[Exception](spark.sql(stmt.format(cat)).collect())
+        finally spark.conf.unset(key)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("spark.graft.rowlevel.mode"), msgs)
+      assert(liveIdV(dir).size == 4, "a refused statement must change nothing")
+    }
 }

@@ -1635,4 +1635,26 @@ class SnapshotsSpec extends SparkSpec {
     assert(countIn("ndv") == rels.size * 3)
     assert(countIn("sum") == rels.size * 3)
   }
+
+  // one case per numeric graft conf: (key, malformed value, an operation
+  // on a committed table that reads the key)
+  private val malformedConfs: Seq[(String, String, String => Unit)] = Seq(
+    ("spark.graft.snapshot.checkpointInterval", "2O", dir => Snapshots.commit(spark, dir, Seq("day", "id"))),
+    ("spark.graft.sidecar.driverBuildMaxBytes", "32MB", dir => Snapshots.commit(spark, dir, Seq("day", "id"), Seq("id"))),
+    ("spark.graft.rewrite.targetBytes", "0", dir => Sources.deleteWhere(spark, dir, $"id" === 2L)),
+    ("spark.graft.dv.maxDeletedFraction", "1.5", dir => DeleteVectors.deleteWhere(spark, dir, $"id" === 2L)),
+    ("spark.graft.dv.driverWriteMaxRows", "lots", dir => DeleteVectors.deleteWhere(spark, dir, $"id" === 2L)))
+  for ((key, bad, op) <- malformedConfs)
+    test(s"malformed $key fails naming the key and the value") {
+      val dir = Files.createTempDirectory("snap_badconf").toString + "/t"
+      table(dir)
+      Snapshots.commit(spark, dir, Seq("day", "id"))
+      val before = Snapshots.latestVersion(spark, dir)
+      spark.conf.set(key, bad)
+      val e =
+        try intercept[IllegalArgumentException](op(dir))
+        finally spark.conf.unset(key)
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      assert(Snapshots.latestVersion(spark, dir) == before, "a refused operation must not commit")
+    }
 }
